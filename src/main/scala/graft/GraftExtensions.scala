@@ -18,8 +18,8 @@ import org.apache.spark.sql.types.StringType
   * Registers the broadcast-free scalar expressions (`extract_iocs`,
   * `redact_iocs`, `refang_text`, `grok_parse`) as permanent built-ins on
   * every session built with the extension. The broadcast-backed expressions
-  * (`scan_turn`, `intel_lookup`) need a compiled `IntelDb` handle and so
-  * stay Column-API / `GraftFunctions.register`-only by design.
+  * (`scan_turn`, `intel_lookup_multi`) need a compiled `IntelDb` handle and
+  * so stay Column-API / `GraftFunctions.register`-only by design.
   *
   * Complements [[graft.functions.GraftFunctions.register]], which installs
   * the same functions as session temp functions from code.

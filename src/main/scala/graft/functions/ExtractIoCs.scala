@@ -57,7 +57,7 @@ object ExtractIoCs {
   private val EMPTY: ArrayData = new GenericArrayData(Array.empty[Any])
   // interned indicator-type UTF8Strings (12 constants; avoids a per-
   // candidate conversion + allocation). SHARED single source for every
-  // scan expression (ScanTurn/ScanTurnFlat/IntelLookup*) — a new
+  // scan expression (ScanTurn/ScanTurnFlat/IntelLookupMulti) — a new
   // indicator type is interned in exactly one place.
   private[functions] val typeInterned: java.util.HashMap[String, UTF8String] = {
     val m = new java.util.HashMap[String, UTF8String]()

@@ -16,7 +16,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * extracted exactly once — a per-database union would duplicate the whole
   * scan+extract subtree (Spark does not dedupe common subplans across union
   * branches). Returns array<struct<db_idx, entry_idx, prefix_len,
-  * match_type>>; db_idx indexes ScanJob's metadata table.
+  * match_type>>; db_idx indexes ScanJob's metadata table, and an empty
+  * array means no match. A single-database lookup is `column(..., Seq(db))`.
+  *
+  * Dispatch follows the reference (database.rs:760-764, 889-901): ipv4/ipv6
+  * candidates walk the LPM trie; everything else takes the string path
+  * (literal exact + paraglob; database.rs:911-981).
   */
 case class IntelLookupMulti(left: Expression, right: Expression,
     dbs: BcHandle[Array[IntelDb]])

@@ -190,13 +190,13 @@ object ScanTurnFlat {
     * extraction on screened turns is invisible. ScanTurn (the stats path)
     * must NOT screen — its candidate counts (A2-A6) require extracting
     * clean turns too. Default OFF: measured on the bench corpus
-    * (ScanFnBench), the screen pass costs ~12% while the single-pass byte
-    * scanner's own anchor sweep already rejects clean turns at the same
-    * cost — the reference needs the AC screen because its per-type regex
-    * extraction is expensive; this engine absorbed that fast path into the
-    * extractor. The screen stays for extraction configs where scanning IS
-    * expensive (many databases, case-folded globs) and for the explicit
-    * `matched(prescreen = true)` filter form.
+    * (single-thread `scan` loop), the screen pass costs ~12% while the
+    * single-pass byte scanner's own anchor sweep already rejects clean
+    * turns at the same cost — the reference needs the AC screen because its
+    * per-type regex extraction is expensive; this engine absorbed that fast
+    * path into the extractor. The screen stays for extraction configs where
+    * scanning IS expensive (many databases, case-folded globs) and for the
+    * explicit `matched(prescreen = true)` filter form.
     */
   def column(text: Column, dbs: Seq[IntelDb],
       config: ScanConfig = ScanConfig(), fastScreen: Boolean = false): Column =

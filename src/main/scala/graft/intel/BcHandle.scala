@@ -10,7 +10,7 @@ import scala.reflect.ClassTag
   *
   * Embedding the structure directly in the expression ships it inside the
   * serialized task binary, so EVERY TASK deserializes the full compiled db
-  * — measured 2.1 s/task for a 100k-glob database (SerProbe: the same 200k
+  * — measured 2.1 s/task for a 100k-glob database (the same 200k
   * lookups took 136 s at 64 partitions vs 2.5 s at 4). At 10^12-turn scale
   * with millions of tasks that per-task tax dominates all real work. The
   * reference's process model is "load the .mxy once, mmap it everywhere"

@@ -39,7 +39,7 @@ import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
   * combine reduces the exchange to histogram-sized rows and pass 2 to
   * the straddling buckets. On `local[*]` with memory-backed shuffle
   * and groups that fit executor memory, Tungsten's in-memory radix
-  * window sort makes the DIRECT form faster (TelemetryScaleProbe:
+  * window sort makes the DIRECT form faster (measured at
   * 10M rows × 5 groups — direct ~1 s, bucketed ~4-7 s: the histogram's
   * per-row string-key hash agg costs more than the radix sort it
   * avoids). At cluster scale the regime flips: a 10^12-row group

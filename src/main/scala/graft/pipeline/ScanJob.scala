@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * {{{
   * turns                                         // table scan (S1)
   *   .withColumn(ioc, explode(extract_iocs(text)))  // E1-E8, one pass
-  *   .withColumn(hit, explode(intel_lookup(...)))   // L2/L3/L4 per db (L8)
+  *   .withColumn(hit, explode(intel_lookup_multi(...)))  // L2/L3/L4 (L8)
   *   .join(broadcast(intelMeta), ...)               // metadata BHJ
   *   -> fan-out writes per indicator_type + clean sink (R4)
   *   -> gold counts + stats (A1-A6, A10) + per-partition lineage metrics

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.functions.{GraftFunctions, IntelLookup}
+import graft.functions.{GraftFunctions, IntelLookupMulti}
 import graft.intel.IntelDb
 import graft.model.IntelEntry
 import graft.ops.{Dedup, Similarity, TextStats}
@@ -31,10 +31,17 @@ object QueryDefs {
     * float64 too). The oracle SQL is frozen this round, so the Spark side
     * adopts the float rendering: values are exact small integers, the
     * double is lossless, and tools/crosscheck.py (now rendering-strict)
-    * goes 136/136.
+    * goes 136/136. A value with |v| >= 2^53 would not be exact as a double,
+    * so it fails the query (naming the column) instead of rounding.
     */
-  private def oracleHugeint(df: DataFrame, cols: String*): DataFrame =
-    cols.foldLeft(df)((d, c) => d.withColumn(c, col(c).cast("double")))
+  private[queries] def oracleHugeint(df: DataFrame, cols: String*): DataFrame =
+    cols.foldLeft(df) { (d, c) =>
+      val exact = 1L << 53
+      d.withColumn(c, when(col(c) >= exact || col(c) <= -exact,
+        raise_error(lit(s"oracleHugeint: column $c has |value| >= 2^53, " +
+          "which a double cannot hold exactly")))
+        .otherwise(col(c).cast("double")))
+    }
 
   /** Write a small feed fixture through the session's DEFAULT Hadoop
     * filesystem and return its qualified path. A driver-local
@@ -225,7 +232,8 @@ object QueryDefs {
     val meta = ScanJob.intelMetaDf(s, Seq(db))
     cands
       .withColumn("hit",
-        explode(IntelLookup.column(col("value"), col("indicator_type"), db)))
+        explode(IntelLookupMulti.column(col("value"), col("indicator_type"),
+          Seq(db))))
       .select(col("value"), col("hit.entry_idx").as("entry_idx"),
         col("hit.prefix_len").as("prefix_len"))
       .join(broadcast(meta.select("entry_idx", "entry")), Seq("entry_idx"))
@@ -246,7 +254,8 @@ object QueryDefs {
     val meta = ScanJob.intelMetaDf(s, Seq(db))
     cands
       .withColumn("hit",
-        explode(IntelLookup.column(col("value"), col("indicator_type"), db)))
+        explode(IntelLookupMulti.column(col("value"), col("indicator_type"),
+          Seq(db))))
       .select(col("value"), col("hit.entry_idx").as("entry_idx"))
       .join(broadcast(meta.select("entry_idx", "entry")), Seq("entry_idx"))
       .groupBy("entry").agg(count(lit(1)).as("n"))
@@ -480,7 +489,7 @@ object QueryDefs {
       lit(".ExAmple.com end")))
       .where(col("indicator_type") === "domain")
       .withColumn("hit", explode(
-        IntelLookup.column(col("value"), col("indicator_type"), db)))
+        IntelLookupMulti.column(col("value"), col("indicator_type"), Seq(db))))
       .select(col("value"), col("hit.entry_idx").as("entry_idx"))
       .join(broadcast(meta.select("entry_idx", "entry")), Seq("entry_idx"))
       .groupBy("value", "entry").agg(count(lit(1)).as("n"))
@@ -519,7 +528,7 @@ object QueryDefs {
     val extraV = parse_json(col("extra_json"))
     domainCands(s, dir)
       .withColumn("hit", explode(
-        IntelLookup.column(col("value"), col("indicator_type"), db)))
+        IntelLookupMulti.column(col("value"), col("indicator_type"), Seq(db))))
       .select(col("value"), col("hit.entry_idx").as("entry_idx"))
       .join(broadcast(meta.select(col("entry_idx"), col("category"),
         coalesce(try_variant_get(extraV, "$.campaign", "string"), lit(""))
@@ -811,7 +820,7 @@ object QueryDefs {
     val extraV = parse_json(col("extra_json"))
     domainCands(s, dir)
       .withColumn("hit", explode(
-        IntelLookup.column(col("value"), col("indicator_type"), db)))
+        IntelLookupMulti.column(col("value"), col("indicator_type"), Seq(db))))
       .select(col("value"), col("hit.entry_idx").as("entry_idx"))
       .join(broadcast(meta.select(col("entry_idx"), col("category"),
         coalesce(try_variant_get(extraV, "$.ttl", "string"), lit(""))
@@ -1094,7 +1103,7 @@ object QueryDefs {
     graft.ops.LogParse.parse(lines, "line", pat)
       .where(col("_grok_matched"))
       .withColumn("hits",
-        IntelLookup.column(col("src"), lit("ipv4"), db))
+        IntelLookupMulti.column(col("src"), lit("ipv4"), Seq(db)))
       .withColumn("sink",
         when(size(col("hits")) > 0, "matched").otherwise("clean"))
       .withColumn("hit", explode_outer(col("hits")))
@@ -1830,13 +1839,19 @@ object QueryDefs {
       .agg(count(lit(1)).as("n_user_events"))
     // the two bucketed writes are independent (different tables) — run
     // them as concurrent driver-side jobs so the dim write back-fills the
-    // fact write's task tail (guide §2.6 overlap-independent-jobs)
+    // fact write's task tail (guide §2.6 overlap-independent-jobs). Two
+    // concurrent saveAsTable calls rely on the session catalog being safe
+    // for concurrent writers: the default in-memory catalog is synchronized.
     val factW = scala.concurrent.Future(
       graft.io.Bucketing.writeBucketed(events, "graft_q107_fact",
         "user_id", 8, sortCols = Seq("user_id")))(
       scala.concurrent.ExecutionContext.global)
-    graft.io.Bucketing.writeBucketed(dim, "graft_q107_dim",
+    // a failed dim write still waits for the fact write, so no job is
+    // left running unsupervised once the failure propagates
+    try graft.io.Bucketing.writeBucketed(dim, "graft_q107_dim",
       "user_id", 8, sortCols = Seq("user_id"))
+    finally scala.concurrent.Await.ready(factW,
+      scala.concurrent.duration.Duration.Inf)
     scala.concurrent.Await.result(factW,
       scala.concurrent.duration.Duration.Inf)
     graft.io.Bucketing.bucketedJoin(s, "graft_q107_fact",
