@@ -26,7 +26,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * per-candidate stats observer).
   */
 case class ScanTurnFlat(child: Expression, dbs: BcHandle[Array[IntelDb]],
-    config: ScanConfig, screen: BcHandle[CleanPreScreen] = null)
+    config: ScanConfig)
     extends UnaryExpression with ImplicitCastInputTypes {
 
   @transient private lazy val scanner = new IocScanner(config)
@@ -41,23 +41,17 @@ case class ScanTurnFlat(child: Expression, dbs: BcHandle[Array[IntelDb]],
     s"scan_turn_flat_${dbs.get.map(_.databaseId).mkString("_")}"
 
   override def nullSafeEval(input: Any): Any =
-    ScanTurnFlat.scan(scanner, dbs.get,
-      if (screen == null) null else screen.get,
-      input.asInstanceOf[UTF8String])
+    ScanTurnFlat.scan(scanner, dbs.get, null, input.asInstanceOf[UTF8String])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val scannerRef =
       ctx.addReferenceObj("scanner", scanner, classOf[IocScanner].getName)
-    // broadcast HANDLES, not the structures: the compiled dbs (and screen)
-    // deserialize once per executor, not once per task (see BcHandle)
+    // broadcast HANDLES, not the structures: the compiled dbs deserialize
+    // once per executor, not once per task (see BcHandle)
     val dbsRef = ctx.addReferenceObj("inteldbs", dbs, "graft.intel.BcHandle")
-    val screenRef =
-      if (screen == null) "null"
-      else s"(graft.intel.CleanPreScreen) ${
-        ctx.addReferenceObj("prescreen", screen, "graft.intel.BcHandle")}.get()"
     nullSafeCodeGen(ctx, ev, c =>
       s"${ev.value} = graft.functions.ScanTurnFlat.scan($scannerRef, " +
-        s"(graft.intel.IntelDb[]) $dbsRef.get(), $screenRef, $c);")
+        s"(graft.intel.IntelDb[]) $dbsRef.get(), null, $c);")
   }
 
   override protected def withNewChildInternal(newChild: Expression): ScanTurnFlat =
@@ -100,7 +94,9 @@ object ScanTurnFlat {
     r
   }
 
-  /** Static entry point shared by interpreted eval and generated code. */
+  /** Static entry point shared by interpreted eval and generated code.
+    * Both pass a null `screen`; the parameter stays for the benchmark's
+    * scan-loop probe, which calls this signature. */
   def scan(scanner: IocScanner, dbs: Array[IntelDb], screen: CleanPreScreen,
       text: UTF8String): ArrayData = {
     val len = text.numBytes()
@@ -183,25 +179,9 @@ object ScanTurnFlat {
   private def grow(scr: ExtractIoCs.RowScratch): Array[Any] =
     ExtractIoCs.growHits(scr)
 
-  /** fastScreen: OPTIONAL embedded clean-turn pre-screen, built at plan
-    * time and broadcast. Output-identical (superset filter; IntelStoreSpec
-    * + CleanPreScreenSpec assert soundness) and only valid here: the
-    * match-only flat form never reports hitless candidates, so skipping
-    * extraction on screened turns is invisible. ScanTurn (the stats path)
-    * must NOT screen — its candidate counts (A2-A6) require extracting
-    * clean turns too. Default OFF: measured on the bench corpus
-    * (single-thread `scan` loop), the screen pass costs ~12% while the
-    * single-pass byte scanner's own anchor sweep already rejects clean
-    * turns at the same cost — the reference needs the AC screen because its
-    * per-type regex extraction is expensive; this engine absorbed that fast
-    * path into the extractor. The screen stays for extraction configs where
-    * scanning IS expensive (many databases, case-folded globs) and for the
-    * explicit `matched(prescreen = true)` filter form.
-    */
   def column(text: Column, dbs: Seq[IntelDb],
-      config: ScanConfig = ScanConfig(), fastScreen: Boolean = false): Column =
+      config: ScanConfig = ScanConfig()): Column =
     ExpressionUtils.column(
       ScanTurnFlat(ExpressionUtils.expression(text),
-        BcHandle.auto(dbs.toArray), config,
-        if (fastScreen) BcHandle.auto(CleanPreScreen.build(dbs)) else null))
+        BcHandle.auto(dbs.toArray), config))
 }

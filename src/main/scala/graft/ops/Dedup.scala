@@ -295,7 +295,7 @@ object Dedup {
     // band self-join otherwise recomputes the per-token md5 vote sweep per
     // join side (same empirically-verified double execution as
     // minhashLshPairs); the banding bit-ops stay lazy above the checkpoint
-    val fps = simhashFingerprints(docs, bits).localCheckpoint()
+    val fps = Staging.stage(simhashFingerprints(docs, bits), "simhash-fps")
     val banded = fps.select(col("doc_id"), col("fingerprint"),
       posexplode(array((0 until bands).map(b =>
         shiftright(col("fingerprint"), b * r)
@@ -343,9 +343,8 @@ object Dedup {
     // from the source scan (empirically SIX FileScans in the unstaged
     // plan, no exchange reuse); blocks are ContextCleaner-reclaimed once
     // the returned frame is unreachable (the .cache() lifecycle)
-    val sh = docs.select(col("doc_id"),
-      explode(shingles(col("text"), k)).as("shingle"))
-      .localCheckpoint()
+    val sh = Staging.stage(docs.select(col("doc_id"),
+      explode(shingles(col("text"), k)).as("shingle")), "ngram-shingles")
     val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("set_size"))
     val kept =
       if (maxShingleDf <= 0) sh
@@ -495,14 +494,6 @@ object Dedup {
         col("__graft_best.s").as("kept_score"))
   }
 
-  /** Unpersist the RDD behind a localCheckpoint'd DataFrame.
-    * `Dataset.unpersist` only talks to the cache manager and is a no-op for
-    * checkpoint blocks — they live on the physical RDD inside the
-    * LogicalRDD plan node.
-    */
-  private def releaseLocalCheckpoint(df: DataFrame): Unit =
-    Checkpoints.releaseLocal(df)
-
   /** Document frequency per shingle — the skew diagnostic behind
     * `maxShingleDf` (shingles are distinct per doc, so count == df).
     */
@@ -590,14 +581,14 @@ object Dedup {
   def dedupLines(docs: DataFrame, minCount: Int = 3,
       textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
     require(minCount >= 2, "minCount must be >= 2 (1 would drop every line)")
-    val staged = docs
+    val staged = Staging.stage(docs
       .select(col(idCol), split(col(textCol), "\n").as("__graft_ls"))
       .select(col(idCol),
         coalesce(size(col("__graft_ls")), lit(0)).cast("long")
           .as("n_lines"),
         col("__graft_ls"),
-        transform(col("__graft_ls"), l => md5(l)).as("__graft_lh"))
-      .localCheckpoint()
+        transform(col("__graft_ls"), l => md5(l)).as("__graft_lh")),
+      "dedup-lines")
     val lines = staged
       .select(col(idCol),
         posexplode(arrays_zip(col("__graft_lh"), col("__graft_ls")))
@@ -679,7 +670,7 @@ object Dedup {
     // staged sweep: (id, n_tokens, ghs) with ghs = md5 per positional
     // window. The token array must be a materialized column before
     // gramWindows touches it (the HOF re-evaluation rule).
-    val staged = docs
+    val staged = Staging.stage(docs
       .select(col(idCol),
         Decontaminate.tokens(col(textCol)).as("__graft_toks"))
       .select(col(idCol),
@@ -687,8 +678,8 @@ object Dedup {
           .as("n_tokens"),
         gramWindows(col("__graft_toks"), n).as("__graft_w"))
       .select(col(idCol), col("n_tokens"),
-        transform(col("__graft_w"), g => md5(g)).as("__graft_ghs"))
-      .localCheckpoint()
+        transform(col("__graft_w"), g => md5(g)).as("__graft_ghs")),
+      "exact-substr")
     val grams = staged
       .select(col(idCol),
         posexplode(col("__graft_ghs")).as(Seq("pos", "gh")))

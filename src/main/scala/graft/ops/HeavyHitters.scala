@@ -70,7 +70,7 @@ object HeavyHitters {
     // single corpus scan. The summary frame is tiny (≤ (k+1) × partitions
     // rows); checkpoint it eagerly so its two consumers (total, verify
     // join) never rescan the corpus.
-    val summary = vals.as[String].mapPartitions { it =>
+    val summary = Staging.stage(vals.as[String].mapPartitions { it =>
       val counters = new scala.collection.mutable.HashMap[String, Long]
       var rows = 0L
       while (it.hasNext) {
@@ -93,12 +93,14 @@ object HeavyHitters {
       }
       Iterator.single((null: String, rows)) ++
         counters.keysIterator.map(key => (key, 0L))
-    }.toDF("item", "rows").localCheckpoint()
+    }.toDF("item", "rows"), "heavy-hitters-summary")
 
     val total = summary.where(col("item").isNull)
       .agg(sum(col("rows"))).as[Option[Long]].head().getOrElse(0L)
-    if (total == 0L) return vals.groupBy("item")
-      .agg(count(lit(1)).as("n_item")) // empty corpus -> empty result
+    if (total == 0L) { // empty corpus -> empty result
+      Staging.release(summary)
+      return vals.groupBy("item").agg(count(lit(1)).as("n_item"))
+    }
 
     val candidates = summary.where(col("item").isNotNull)
       .select("item").distinct()

@@ -102,26 +102,17 @@ object Similarity {
 
   /** Default `maxCollectCentroids` for [[ivfCentroids]] — below this the
     * Lloyd loop collects each round's centroid table to the driver; above
-    * it the table stays a (localCheckpoint'd) DataFrame. Shared with
+    * it the table stays a staged DataFrame. Shared with
     * [[ivfTopK]]/[[semDedup]] so they can tell which representation their
-    * centroid table took and release live checkpoint blocks accordingly.
+    * centroid table took and release a live centroid stage accordingly.
     */
   val DefaultMaxCollectCentroids = 512
 
   /** True when [[ivfCentroids]] with these parameters returns a LIVE
-    * localCheckpoint whose blocks the consumer must release (the
-    * DF-resident Lloyd path).
+    * stage the consumer must release (the DF-resident Lloyd path).
     */
   private def centroidsAreLive(nlist: Int, lloydRounds: Int): Boolean =
     nlist > DefaultMaxCollectCentroids && lloydRounds > 0
-
-  /** Release the blocks of a centroid table returned by [[ivfCentroids]]'
-    * DF-resident path (nlist > maxCollectCentroids with Lloyd rounds) once
-    * nothing lazy still derives from it. No-op for non-checkpointed
-    * tables.
-    */
-  def releaseCentroids(cents: DataFrame): Unit =
-    Checkpoints.releaseLocal(cents)
 
   private[graft] def resolveCap(requested: Int, floorMin: Int,
       buckets: Int, corpusRows: => Long): Int =
@@ -228,8 +219,8 @@ object Similarity {
     *    row_number window over the (vec_id)-only projection (single
     *    partition, but nlist ids x 8 bytes, never the vectors), each
     *    round's update LEFT-joins the previous centroid table (empty
-    *    clusters keep their centroid via coalesce) and is localCheckpoint'd
-    *    to truncate lineage, superseded tables' blocks released.
+    *    clusters keep their centroid via coalesce) and is staged to
+    *    truncate lineage, superseded tables released.
     *
     * Driver footprint honesty: the assignment join still BROADCASTS the
     * centroid table up to [[MaxBroadcastCentroids]] (a broadcast is BUILT
@@ -240,11 +231,11 @@ object Similarity {
     * real wall — coarse-quantize the assignment itself first.)
     *
     * Block lifetime: with `nlist > maxCollectCentroids` and
-    * `lloydRounds > 0` the RETURNED table is a live localCheckpoint —
-    * call [[releaseCentroids]] when done with it (and with everything
-    * derived lazily from it), or its blocks stay pinned for the
-    * application lifetime. The collect path returns a driver-local table
-    * with no pinned blocks.
+    * `lloydRounds > 0` the RETURNED table is a live stage — call
+    * `Staging.release` on it when done with it (and with everything
+    * derived lazily from it), or it stays pinned for the application
+    * lifetime. The collect path returns a driver-local table with no
+    * stage behind it.
     */
   def ivfCentroids(corpus: DataFrame, nlist: Int,
       lloydRounds: Int = 0,
@@ -256,7 +247,8 @@ object Similarity {
     // quantization per assignment AND per update (the q41 lesson:
     // iterative refinement must never leave its loop input lazy)
     val qRaw = corpus.select(col("vec_id"), quantize(col("embedding")).as("qv"))
-    val q = if (lloydRounds > 0) qRaw.localCheckpoint() else qRaw
+    val q =
+      if (lloydRounds > 0) Staging.stage(qRaw, "ivf-quantized") else qRaw
     val cw = Window.partitionBy("vec_id")
       .orderBy(col("ccos").desc, col("centroid_id").asc)
     // one Lloyd round: assignment (argmax cosine, ties by centroid_id) +
@@ -293,7 +285,7 @@ object Similarity {
         cents = cents.map { case (id, old) => (id, sums.getOrElse(id, old)) }
         round += 1
       }
-      if (lloydRounds > 0) Checkpoints.releaseLocal(q)
+      if (lloydRounds > 0) Staging.release(q)
       cents.toDF("centroid_id", "cv")
     } else {
       // DF-resident path: renumber init centroids 0..n-1 by vec_id order
@@ -305,20 +297,19 @@ object Similarity {
             .cast("long").as("centroid_id"))
       var cents = q.join(initIds, "vec_id")
         .select(col("centroid_id"), col("qv").as("cv"))
-      if (lloydRounds > 0) cents = cents.localCheckpoint()
+      if (lloydRounds > 0) cents = Staging.stage(cents, "ivf-centroids")
       var round = 0
       while (round < lloydRounds) {
-        val next = cents.as("p")
+        val next = Staging.stage(cents.as("p")
           .join(lloydRound(cents).withColumnRenamed("cv", "nv"),
             Seq("centroid_id"), "left")
           .select(col("centroid_id"),
-            coalesce(col("nv"), col("p.cv")).as("cv"))
-          .localCheckpoint()
-        Checkpoints.releaseLocal(cents)
+            coalesce(col("nv"), col("p.cv")).as("cv")), "ivf-centroids")
+        Staging.release(cents)
         cents = next
         round += 1
       }
-      if (lloydRounds > 0) Checkpoints.releaseLocal(q)
+      if (lloydRounds > 0) Staging.release(q)
       cents
     }
   }
@@ -354,16 +345,16 @@ object Similarity {
     val cw = Window.partitionBy("vec_id")
       .orderBy(col("ccos").desc, col("centroid_id").asc)
     val ranked = scored.withColumn("crank", row_number().over(cw))
-    // DF-resident Lloyd path: the centroid table is a LIVE localCheckpoint
-    // (see ivfCentroids). Materialize the pruned assignment table (the only
-    // thing derived from it — n x max(nprobe,1) rows) eagerly, then release
-    // the centroid blocks NOW instead of leaking them until driver GC; the
-    // collect path keeps the fully lazy plan.
+    // DF-resident Lloyd path: the centroid table is a LIVE stage (see
+    // ivfCentroids). Stage the pruned assignment table (the only thing
+    // derived from it — n x max(nprobe,1) rows), then release the centroid
+    // stage NOW instead of leaking it until driver GC; the collect path
+    // keeps the fully lazy plan.
     val base =
       if (centroidsAreLive(nlist, lloydRounds)) {
-        val pruned = ranked.where(col("crank") <= math.max(nprobe, 1))
-          .localCheckpoint()
-        releaseCentroids(cents)
+        val pruned = Staging.stage(
+          ranked.where(col("crank") <= math.max(nprobe, 1)), "ivf-pruned")
+        Staging.release(cents)
         pruned
       } else ranked
     val corpusSide = {
@@ -486,13 +477,13 @@ object Similarity {
       .withColumn("crank", row_number().over(cw))
       .where(col("crank") === 1)
       .select("centroid_id", "vec_id", "qv")
-    // same live-checkpoint release discipline as ivfTopK: on the
-    // DF-resident Lloyd path, materialize the assignment (one row per
-    // corpus vector) and free the centroid blocks immediately
+    // same live-stage release discipline as ivfTopK: on the DF-resident
+    // Lloyd path, stage the assignment (one row per corpus vector) and
+    // free the centroid stage immediately
     val assigned =
       if (centroidsAreLive(nlist, lloydRounds)) {
-        val chk = assignedLazy.localCheckpoint()
-        releaseCentroids(cents)
+        val chk = Staging.stage(assignedLazy, "semdedup-assigned")
+        Staging.release(cents)
         chk
       } else assignedLazy
     val participants =

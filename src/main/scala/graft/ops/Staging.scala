@@ -1,66 +1,86 @@
 package graft.ops
 
 import graft.io.ParquetTableIO
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.{DataFrame, SaveMode}
 
-/** Staging seam for multi-consumer intermediate frames (round 6,
-  * VERDICT r05 item 3).
+/** The one place an intermediate frame is materialized and freed.
   *
-  * The heavy ops (SetJoin, Curation, the minhash pair generator) stage
-  * frames that several downstream consumers re-read. In this sandbox the
-  * right mechanism is `localCheckpoint` — one in-memory materialization,
-  * released deterministically — but localCheckpoint pins blocks in
-  * executor storage and is NOT fault-tolerant: on a preemptible cluster a
-  * lost executor loses blocks whose lineage was truncated, killing the
-  * job. At 100 TB the staged token/band tables must be durable.
+  * Lifecycle: an operator [[stage]]s a frame that several consumers
+  * re-read, then frees it with [[release]] (that stage) or [[releaseDeep]]
+  * (every stage a derived frame reads) once nothing lazy still needs it.
+  * A stage that escapes inside an operator's lazy result is freed by the
+  * caller with `releaseDeep(result)` (in the default mode the
+  * ContextCleaner also frees it once the result is unreachable; a durable
+  * table left unreleased stays until its directory is deleted).
   *
-  * This object makes the mechanism selectable PER RUN without touching
-  * any operator signature: by default `stage` is `localCheckpoint`;
-  * setting `-Dgraft.staging.dir=/warehouse/tmp` (or env
-  * `GRAFT_STAGING_DIR`) reroutes every staged frame through a real
-  * parquet table write + read-back via [[graft.io.ParquetTableIO]] — the
-  * "materialize to a table" shape a production pipeline runs, durable
-  * across executor loss, at the cost of one table write per staged frame
-  * (cost delta on the bench corpus recorded in OPTIMIZATION_r06.md).
+  * The mechanism is chosen per session by `spark.graft.staging.dir`
+  * (`--conf`, `SparkSession.conf.set`, or a `-Dspark.graft.staging.dir`
+  * JVM property):
+  *  - unset (default): `localCheckpoint` — one eager in-memory
+  *    materialization with truncated lineage. Release unpersists its
+  *    blocks (`Dataset.unpersist` cannot: the LogicalRDD pins them). Not
+  *    fault-tolerant: a lost executor loses the blocks, and the job.
+  *  - set: a parquet table `<dir>/<pid>-<seq>-<name>` written and read
+  *    back through [[graft.io.ParquetTableIO]], durable across executor
+  *    loss at the cost of one table write per stage. Release deletes the
+  *    table; Staging deletes only tables it wrote itself.
   *
-  * Lifecycle: [[release]] frees a LOCAL stage's blocks immediately (the
-  * previous `Checkpoints.releaseLocal` behavior). Durable stages hold no
-  * executor memory, so release is a no-op for them; their files live
-  * under `<dir>/<pid>-<seq>-<name>` and are reclaimed by deleting the
-  * staging directory after the run (they are per-process-unique, so
-  * concurrent runs sharing a dir never collide).
+  * Either way a stage is a leaf of every plan that reads it, so
+  * [[releaseDeep]] never walks into a stage's own lineage.
   */
 private[graft] object Staging {
 
   private val seq = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  private def durableDir: Option[String] =
-    sys.props.get("graft.staging.dir")
-      .orElse(sys.env.get("GRAFT_STAGING_DIR")).filter(_.nonEmpty)
+  /** Durable tables written by [[stage]] and not yet deleted. */
+  private val tables = java.util.concurrent.ConcurrentHashMap.newKeySet[Path]()
 
-  /** Materialize `df` once for multi-consumer reuse: localCheckpoint by
-    * default, durable parquet round-trip when a staging dir is set.
-    * `name` only labels the durable table (diagnosability); uniqueness
-    * comes from pid + a process-wide sequence.
+  /** Materialize `df` once for multi-consumer reuse. `name` labels the
+    * durable table; uniqueness comes from pid + a process-wide sequence.
     */
-  def stage(df: DataFrame, name: String): DataFrame = durableDir match {
-    case None => df.localCheckpoint()
-    case Some(dir) =>
-      val io = new ParquetTableIO(dir)
-      val table =
-        s"${ProcessHandle.current().pid()}-${seq.incrementAndGet()}-$name"
-      io.write(df, table, SaveMode.ErrorIfExists)
-      io.read(df.sparkSession, table)
+  def stage(df: DataFrame, name: String): DataFrame =
+    df.sparkSession.conf.getOption("spark.graft.staging.dir")
+      .filter(_.nonEmpty) match {
+      case None => df.localCheckpoint()
+      case Some(dir) =>
+        val io = new ParquetTableIO(dir)
+        val table =
+          s"${ProcessHandle.current().pid()}-${seq.incrementAndGet()}-$name"
+        io.write(df, table, SaveMode.ErrorIfExists)
+        val staged = io.read(df.sparkSession, table)
+        tableRoots(staged.queryExecution.analyzed).foreach(tables.add)
+        staged
+    }
+
+  /** Free `df` if it is itself a stage; no-op for any other frame, even
+    * one derived from a stage.
+    */
+  def release(df: DataFrame): Unit = free(df, df.queryExecution.analyzed)
+
+  /** Free every stage `df`'s plan reads — for callers holding only a frame
+    * derived from stages. Only safe once nothing lazy still needs them.
+    */
+  def releaseDeep(df: DataFrame): Unit =
+    df.queryExecution.analyzed.foreach(free(df, _))
+
+  private def tableRoots(plan: LogicalPlan): Seq[Path] = plan match {
+    case r: LogicalRelation => r.relation match {
+      case fs: HadoopFsRelation => fs.location.rootPaths
+      case _ => Nil
+    }
+    case _ => Nil
   }
 
-  /** Release a staged frame: frees a local stage's blocks; no-op for a
-    * durable stage (no executor memory held; files reclaimed with the
-    * staging dir).
-    */
-  def release(df: DataFrame): Unit = Checkpoints.releaseLocal(df)
-
-  /** Deep variant of [[release]] — every local checkpoint reachable under
-    * `df` (see [[Checkpoints.releaseLocalDeep]]).
-    */
-  def releaseDeep(df: DataFrame): Unit = Checkpoints.releaseLocalDeep(df)
+  private def free(df: DataFrame, node: LogicalPlan): Unit = node match {
+    case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+    case _ =>
+      tableRoots(node).filter(tables.remove).foreach { p =>
+        p.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+          .delete(p, true)
+      }
+  }
 }

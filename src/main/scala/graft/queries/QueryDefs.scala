@@ -3,7 +3,7 @@ package graft.queries
 import graft.functions.{GraftFunctions, IntelLookupMulti}
 import graft.intel.IntelDb
 import graft.model.IntelEntry
-import graft.ops.{Dedup, Similarity, TextStats}
+import graft.ops.{Dedup, Similarity, Staging, TextStats}
 import graft.pipeline.ScanJob
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -470,7 +470,11 @@ object QueryDefs {
     val docs = floodDocs(s, dir)
     val pairs = Dedup.minhashLshPairs(docs, k = 5, numHashes = 8,
       bands = 4, maxBandDf = 10)
-    Dedup.nearDupClusters(docs, pairs).orderBy("doc_id")
+    val clusters = Dedup.nearDupClusters(docs, pairs)
+    // the clusters read their own staged label table, not the pairs: free
+    // the banded stage behind the pairs now
+    Staging.releaseDeep(pairs)
+    clusters.orderBy("doc_id")
   }
 
   /** q34: case-insensitive match mode end-to-end (MatchMode::CaseInsensitive,
@@ -853,15 +857,16 @@ object QueryDefs {
     * engines), proving curate needs no numeric doc ids.
     */
   def qConvCurate(s: SparkSession, dir: String): DataFrame = {
-    // checkpoint the reconstructed transcripts ONCE: both curate inputs
+    // stage the reconstructed transcripts ONCE: both curate inputs
     // derive from this frame, and leaving it lazy re-runs the conv_id
     // shuffle + collect_list aggregation for the train AND eval sides
     // (~2x the reconstruction cost; at cluster scale, 2x the turn-table
-    // scan). curate materializes its output internally, so the blocks are
+    // scan). curate materializes its output internally, so the stage is
     // released before this function returns.
-    val docs = graft.ops.Conversations.transcriptText(goldTurns(s, dir))
-      .select(col("conv_id").as("doc_id"), col("transcript"))
-      .localCheckpoint()
+    val docs = Staging.stage(
+      graft.ops.Conversations.transcriptText(goldTurns(s, dir))
+        .select(col("conv_id").as("doc_id"), col("transcript")),
+      "conv-curate-docs")
     val isEval =
       split(col("doc_id"), "-").getItem(1).cast("int") % 10 === 0
     val out = graft.ops.Curation.curate(
@@ -873,8 +878,8 @@ object QueryDefs {
       contamN = 13, minShared = 4,
       textCol = "transcript")
     // curate's returned verdict table is itself materialized, so nothing
-    // downstream re-reads the transcript checkpoint — release it now
-    graft.ops.Checkpoints.releaseLocal(docs)
+    // downstream re-reads the transcript stage — release it now
+    Staging.release(docs)
     out.orderBy("doc_id")
   }
 
