@@ -5,6 +5,7 @@ import graft.intel.IntelDb
 import graft.model.{IntelEntry, Turn}
 import graft.oracle.Oracle
 import graft.pipeline.ScanJob
+import org.apache.spark.sql.functions.{col, lit}
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.sql.Timestamp
@@ -23,10 +24,13 @@ import scala.util.Random
   * VALUES only under exactly these conditions — so this spec generates a
   * seeded hostile corpus (valid IoCs of every family, near-miss mutations,
   * unicode junk, thousands of distinct hash-like tokens to thrash the
-  * 2048-slot caches), runs it through `ScanJob.candidates`/`matched` at 32
-  * partitions on the shared local[4] session, and asserts exact multiset
-  * equality with the single-threaded scanner — TWICE, because a poisoned
-  * cache from pass one would only surface on pass two.
+  * 2048-slot caches), runs it at 32 partitions on the shared local[4]
+  * session through every scan kernel — `ScanJob.candidates` (ExtractIoCs),
+  * `matched` (ScanTurnFlat), `enriched` over the candidates
+  * (IntelLookupMulti) and `routedStream` (ScanTurn, matched and clean
+  * sinks) — and asserts exact multiset equality with the single-threaded
+  * scanner — TWICE, because a poisoned cache from pass one would only
+  * surface on pass two.
   *
   * Ground truth is NOT needed: whatever the scanner says, both paths must
   * say identically.
@@ -113,6 +117,17 @@ class ScanDifferentialSpec extends AnyFunSuite {
     IntelDb.build("rand", entries)
   }
 
+  /** The Matched-shaped projection of a matched/enriched/routed frame. */
+  private def asMatched(df: org.apache.spark.sql.DataFrame)
+      : Map[graft.model.Matched, Int] =
+    df.withColumnRenamed("entry_idx", "pattern_id")
+      .select("conv_id", "turn_idx", "role", "indicator_type", "value",
+        "matched_text", "span_start", "span_end", "database_id",
+        "match_type", "prefix_len", "pattern_id", "threat_level",
+        "category", "source", "confidence")
+      .as[graft.model.Matched].collect().toSeq
+      .groupBy(identity).view.mapValues(_.size).toMap
+
   test("random hostile corpus: distributed candidates+matched == " +
     "single-threaded scanner, exactly, twice (32 partitions, colliding values)") {
     val r = new Random(0x5eed4007L)
@@ -131,6 +146,12 @@ class ScanDifferentialSpec extends AnyFunSuite {
       s"hostile corpus produced too few matches: ${oracleMatched.size}")
     val oCandMs = oracleCands.groupBy(identity).view.mapValues(_.size).toMap
     val oMatchMs = oracleMatched.groupBy(identity).view.mapValues(_.size).toMap
+    // every turn with no oracle match (no candidates, or candidates with
+    // no hit) must reach the routed clean sink exactly once
+    val oCleanTurns = turnsSeq.size -
+      oracleMatched.map(m => (m.conv_id, m.turn_idx)).distinct.size
+    val routed = ScanJob.routedStream(spark,
+      turnsDf.withColumn("bucket", lit(0)), dbs)
 
     // two passes: pass 1 populates every per-thread cache with colliding
     // values; pass 2 would surface any poisoned slot
@@ -139,15 +160,14 @@ class ScanDifferentialSpec extends AnyFunSuite {
         .as[graft.model.Candidate].collect().toSeq
       assert(cands.groupBy(identity).view.mapValues(_.size).toMap == oCandMs,
         s"candidate multiset diverged on pass $pass")
-      val matched = ScanJob.matched(turnsDf, dbs, spark)
-        .withColumnRenamed("entry_idx", "pattern_id")
-        .select("conv_id", "turn_idx", "role", "indicator_type", "value",
-          "matched_text", "span_start", "span_end", "database_id",
-          "match_type", "prefix_len", "pattern_id", "threat_level",
-          "category", "source", "confidence")
-        .as[graft.model.Matched].collect().toSeq
-      assert(matched.groupBy(identity).view.mapValues(_.size).toMap == oMatchMs,
+      assert(asMatched(ScanJob.matched(turnsDf, dbs, spark)) == oMatchMs,
         s"matched multiset diverged on pass $pass")
+      assert(asMatched(ScanJob.enriched(ScanJob.candidates(turnsDf), dbs,
+        spark)) == oMatchMs, s"enriched multiset diverged on pass $pass")
+      assert(asMatched(routed.where(col("sink") === "matched")) == oMatchMs,
+        s"routed matched multiset diverged on pass $pass")
+      assert(routed.where(col("sink") === "clean").count() == oCleanTurns,
+        s"routed clean turn count diverged on pass $pass")
     }
   }
 }
