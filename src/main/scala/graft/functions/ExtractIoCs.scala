@@ -54,10 +54,10 @@ object ExtractIoCs {
   ))
   val schema: DataType = ArrayType(elementSchema, containsNull = false)
 
-  private val EMPTY: ArrayData = new GenericArrayData(Array.empty[Any])
+  private[functions] val EMPTY: ArrayData = new GenericArrayData(Array.empty[Any])
   // interned indicator-type UTF8Strings (12 constants; avoids a per-
   // candidate conversion + allocation). SHARED single source for every
-  // scan expression (ScanTurn/ScanTurnFlat/IntelLookupMulti) — a new
+  // scan expression (ExtractIoCs/ScanTurn/ScanTurnFlat) — a new
   // indicator type is interned in exactly one place.
   private[functions] val typeInterned: java.util.HashMap[String, UTF8String] = {
     val m = new java.util.HashMap[String, UTF8String]()
@@ -66,20 +66,23 @@ object ExtractIoCs {
     m
   }
 
-  /** Shared match_type constants (ip vs pattern/literal/glob families). */
-  private[functions] val IP = UTF8String.fromString("ip")
-  private[functions] val PATTERN = UTF8String.fromString("pattern")
-
   /** Per-row thread scratch behind ONE ThreadLocal (text-copy buffer,
-    * candidate buffer, and ScanTurn's hit-row buffer): the per-row copies/
-    * buffers were the dominant allocations at 32 scan threads (GC-bound
-    * scaling), and each separate ThreadLocal costs a hash probe in a
-    * collision-prone per-thread map (JFR: getEntryAfterMiss).
+    * candidate buffer, the probe's hit buffer, ScanTurnFlat's row buffer):
+    * the per-row copies/buffers were the dominant allocations at 32 scan
+    * threads (GC-bound scaling), and each separate ThreadLocal costs a hash
+    * probe in a collision-prone per-thread map (JFR: getEntryAfterMiss).
     */
   final class RowScratch {
     var buf: Array[Byte] = new Array[Byte](1024)
     val iocs = new scala.collection.mutable.ArrayBuffer[graft.model.Ioc](8)
-    var hits: Array[Any] = new Array[Any](16)
+    // IntelLookupMulti.probe's (db_idx, entry_idx, prefix_len) hit triples,
+    // grow-only
+    var hits: Array[Int] = new Array[Int](48)
+    // ScanTurnFlat's rows of the current turn, grow-only
+    var rows: Array[Any] = new Array[Any](16)
+    // the candidate's value / matched_text bytes, set by internCandidate
+    var valueU8: UTF8String = _
+    var matchedU8: UTF8String = _
     // direct-mapped value-intern cache (see internSpan): ~16 KB of refs
     val intern: Array[UTF8String] = new Array[UTF8String](InternSize)
     // scanner anchor scratch, carried here so one ThreadLocal probe serves
@@ -88,29 +91,6 @@ object ExtractIoCs {
   }
   val tlScratch = new ThreadLocal[RowScratch] {
     override def initialValue(): RowScratch = new RowScratch
-  }
-
-  /** Double the scratch hit buffer (shared by ScanTurn/ScanTurnFlat). */
-  def growHits(scr: RowScratch): Array[Any] = {
-    val old = scr.hits
-    val bigger = new Array[Any](old.length * 2)
-    System.arraycopy(old, 0, bigger, 0, old.length)
-    scr.hits = bigger
-    bigger
-  }
-
-  /** Direct 4-field (db_idx, entry_idx, prefix_len, match_type) hit row —
-    * InternalRow.apply's varargs path detours through Seq.toArray per hit
-    * (profiled); shared by ScanTurn, ScanTurnFlat and IntelLookupMulti.
-    */
-  def hitRow4(d: Int, entryIdx: Int, prefixLen: Int,
-      matchType: UTF8String): org.apache.spark.sql.catalyst.InternalRow = {
-    val r = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(4)
-    r.update(0, d)
-    r.update(1, entryIdx)
-    r.update(2, prefixLen)
-    r.update(3, matchType)
-    r
   }
 
   private final val InternSize = 2048 // power of two
@@ -188,6 +168,22 @@ object ExtractIoCs {
     true
   }
 
+  /** The candidate-string rule of every scan expression: set
+    * `scr.valueU8`/`scr.matchedU8` to the candidate's value and matched
+    * text. When the canonical value IS the matched span (every type except
+    * canonicalized IPv6) both are the span's UTF-8 bytes, interned straight
+    * out of the scratch buffer — no char-by-char re-encode of the String.
+    */
+  def internCandidate(scr: RowScratch, buf: Array[Byte],
+      m: graft.model.Ioc): Unit =
+    if (m.matched_text eq m.value) {
+      scr.valueU8 = internSpan(scr, buf, m.span_start, m.span_end)
+      scr.matchedU8 = scr.valueU8
+    } else {
+      scr.valueU8 = internString(scr, m.value)
+      scr.matchedU8 = internString(scr, m.matched_text)
+    }
+
   /** Copy the UTF8String's bytes into the scratch buffer (grown
     * geometrically, never shrunk); read with text.numBytes().
     */
@@ -229,17 +225,9 @@ object ExtractIoCs {
       val m = iocs(i)
       val row = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(5)
       row.update(0, typeInterned.get(m.indicator_type))
-      // when the canonical value IS the matched span (every type except
-      // canonicalized IPv6), intern the UTF-8 bytes straight out of the
-      // scratch buffer instead of re-encoding the String char by char
-      val valueU8 =
-        if (m.matched_text eq m.value)
-          internSpan(scr, buf, m.span_start, m.span_end)
-        else internString(scr, m.value)
-      row.update(1, valueU8)
-      row.update(2,
-        if (m.matched_text eq m.value) valueU8
-        else internString(scr, m.matched_text))
+      internCandidate(scr, buf, m)
+      row.update(1, scr.valueU8)
+      row.update(2, scr.matchedU8)
       row.update(3, m.span_start)
       row.update(4, m.span_end)
       rows(i) = row

@@ -3,9 +3,8 @@ package graft.functions
 import graft.intel.{BcHandle, IntelDb}
 import graft.model.{IndicatorType => T}
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow, ImplicitCastInputTypes}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftbridge.{ColumnBridge => ExpressionUtils}
 import org.apache.spark.sql.types._
@@ -65,43 +64,91 @@ object IntelLookupMulti {
   ))
   val schema: DataType = ArrayType(elementSchema, containsNull = false)
 
-  private val IP = ExtractIoCs.IP
-  private val PATTERN = ExtractIoCs.PATTERN
-  private val EMPTY = new GenericArrayData(Array.empty[Any])
+  private val IP = UTF8String.fromString("ip")
+  private val PATTERN = UTF8String.fromString("pattern")
   private val IPV4 = UTF8String.fromString(T.Ipv4)
   private val IPV6 = UTF8String.fromString(T.Ipv6)
 
-  private def hitRow(d: Int, entryIdx: Int, prefixLen: Int,
-      matchType: UTF8String): InternalRow =
-    ExtractIoCs.hitRow4(d, entryIdx, prefixLen, matchType)
-
-  def lookup(dbs: Array[IntelDb], value: UTF8String,
-      itype: UTF8String): ArrayData = {
-    val isV6 = itype.equals(IPV6)
-    val isIp = isV6 || itype.equals(IPV4)
-    val v = value.toString
-    var out: scala.collection.mutable.ArrayBuffer[Any] = null
+  /** The one place a candidate becomes hits, shared by every scan
+    * expression: probe `value` against every database in index order and
+    * write one (db_idx, entry_idx, prefix_len) triple per hit into
+    * `scr.hits` from index 0 (at most one longest-prefix ip hit per database;
+    * string hits in `lookupString` order). Returns the end of the written
+    * triples, so a candidate has `end / 3` hits. A string hit has
+    * prefix_len -1; the match type follows from it (see [[matchType]]).
+    * No allocation beyond `lookupIp`'s result tuple and buffer growth.
+    */
+  def probe(dbs: Array[IntelDb], value: String, isIp: Boolean,
+      isV6: Boolean, scr: ExtractIoCs.RowScratch): Int = {
+    var end = 0
     var d = 0
     while (d < dbs.length) {
-      val db = dbs(d)
       if (isIp) {
-        val hit = db.lookupIp(v, isV6)
-        if (hit != null) {
-          if (out == null) out = new scala.collection.mutable.ArrayBuffer[Any](4)
-          out += hitRow(d, hit._1, hit._2, IP)
-        }
+        val hit = dbs(d).lookupIp(value, isV6)
+        if (hit != null) end = put(scr, end, d, hit._1, hit._2)
       } else {
-        val ids = db.lookupString(v)
-        var i = 0
-        while (i < ids.length) {
-          if (out == null) out = new scala.collection.mutable.ArrayBuffer[Any](4)
-          out += hitRow(d, ids(i), -1, PATTERN)
-          i += 1
+        val ids = dbs(d).lookupString(value)
+        var k = 0
+        while (k < ids.length) {
+          end = put(scr, end, d, ids(k), -1)
+          k += 1
         }
       }
       d += 1
     }
-    if (out == null) EMPTY else new GenericArrayData(out.toArray)
+    end
+  }
+
+  /** [[probe]] for a scanner candidate, dispatched by its indicator type. */
+  def probe(dbs: Array[IntelDb], m: graft.model.Ioc,
+      scr: ExtractIoCs.RowScratch): Int = {
+    val isV6 = m.indicator_type == T.Ipv6
+    probe(dbs, m.value, isV6 || m.indicator_type == T.Ipv4, isV6, scr)
+  }
+
+  /** Write one hit triple at `end` (growing `scr.hits`); the new end. */
+  private def put(scr: ExtractIoCs.RowScratch, end: Int, d: Int,
+      entryIdx: Int, prefixLen: Int): Int = {
+    if (end + 3 > scr.hits.length)
+      scr.hits = java.util.Arrays.copyOf(scr.hits, scr.hits.length * 2)
+    val hits = scr.hits
+    hits(end) = d
+    hits(end + 1) = entryIdx
+    hits(end + 2) = prefixLen
+    end + 3
+  }
+
+  /** match_type of a hit triple: ip hits carry their prefix length. */
+  private[functions] def matchType(prefixLen: Int): UTF8String =
+    if (prefixLen < 0) PATTERN else IP
+
+  /** The `hits` array of the [[probe]] triples in `scr.hits` before `end`. */
+  private[functions] def hitArray(scr: ExtractIoCs.RowScratch,
+      end: Int): ArrayData = {
+    if (end == 0) return ExtractIoCs.EMPTY
+    val hits = scr.hits
+    val rows = new Array[Any](end / 3)
+    var h = 0
+    while (h < end) {
+      // direct 4-field row: InternalRow.apply's varargs path detours
+      // through Seq.toArray per hit (profiled)
+      val r = new GenericInternalRow(4)
+      r.update(0, hits(h))
+      r.update(1, hits(h + 1))
+      r.update(2, hits(h + 2))
+      r.update(3, matchType(hits(h + 2)))
+      rows(h / 3) = r
+      h += 3
+    }
+    new GenericArrayData(rows)
+  }
+
+  def lookup(dbs: Array[IntelDb], value: UTF8String,
+      itype: UTF8String): ArrayData = {
+    val isV6 = itype.equals(IPV6)
+    val scr = ExtractIoCs.tlScratch.get()
+    hitArray(scr, probe(dbs, value.toString, isV6 || itype.equals(IPV4),
+      isV6, scr))
   }
 
   def column(value: Column, indicatorType: Column, dbs: Seq[IntelDb]): Column =

@@ -2,7 +2,6 @@ package graft.functions
 
 import graft.extract.{IocScanner, ScanConfig}
 import graft.intel.{BcHandle, IntelDb}
-import graft.model.{IndicatorType => T}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -80,30 +79,15 @@ object ScanTurn {
 
   private val CAND = UTF8String.fromString("cand")
   private val CLEAN = UTF8String.fromString("clean")
-  private val IP = ExtractIoCs.IP
-  private val PATTERN = ExtractIoCs.PATTERN
-  private val EMPTY_HITS: ArrayData = new GenericArrayData(Array.empty[Any])
   // one immutable clean-marker row shared by all threads (read-only)
   private val CLEAN_ROW: InternalRow = {
     val row = new GenericInternalRow(7)
     row.update(0, CLEAN)
-    row.update(6, EMPTY_HITS)
+    row.update(6, ExtractIoCs.EMPTY)
     row
   }
   private val CLEAN_ONLY: ArrayData = new GenericArrayData(Array[Any](CLEAN_ROW))
   private def typeInterned = ExtractIoCs.typeInterned
-
-  // hit-row scratch rides ExtractIoCs.RowScratch (one ThreadLocal get per
-  // turn): the common case is 0-4 hits, and a fresh ArrayBuffer per
-  // candidate (plus the varargs InternalRow.apply -> Seq -> toArray
-  // detour) was a measured allocation hot spot at 32 scan threads.
-  // Buffer growth + the 4-field hit row are the shared ExtractIoCs helpers.
-  private def growHits(scr: ExtractIoCs.RowScratch): Array[Any] =
-    ExtractIoCs.growHits(scr)
-
-  private def hitRow(d: Int, entryIdx: Int, prefixLen: Int,
-      matchType: UTF8String): InternalRow =
-    ExtractIoCs.hitRow4(d, entryIdx, prefixLen, matchType)
 
   /** Static entry point shared by interpreted eval and generated code. */
   def scan(scanner: IocScanner, dbs: Array[IntelDb],
@@ -119,55 +103,20 @@ object ScanTurn {
     var i = 0
     while (i < n) {
       val m = iocs(i)
-      val isV6 = m.indicator_type == T.Ipv6
-      val isIp = isV6 || (m.indicator_type == T.Ipv4)
-      var hits = scr.hits
-      var nHits = 0
-      var d = 0
-      while (d < dbs.length) {
-        val db = dbs(d)
-        if (isIp) {
-          val hit = db.lookupIp(m.value, isV6)
-          if (hit != null) {
-            if (nHits == hits.length) hits = growHits(scr)
-            hits(nHits) = hitRow(d, hit._1, hit._2, IP)
-            nHits += 1
-          }
-        } else {
-          val ids = db.lookupString(m.value)
-          var k = 0
-          while (k < ids.length) {
-            if (nHits == hits.length) hits = growHits(scr)
-            hits(nHits) = hitRow(d, ids(k), -1, PATTERN)
-            nHits += 1
-            k += 1
-          }
-        }
-        d += 1
-      }
+      // hits go through the RowScratch triple buffer (one ThreadLocal get
+      // per turn): a fresh buffer per candidate was a measured allocation
+      // hot spot at 32 scan threads
+      val end = IntelLookupMulti.probe(dbs, m, scr)
       val row = new GenericInternalRow(7)
       row.update(0, CAND)
       row.update(1, typeInterned.get(m.indicator_type))
-      // value bytes: when the canonical value IS the matched span (every
-      // type except canonicalized IPv6), intern the UTF-8 bytes straight
-      // out of the scratch buffer — no char-by-char re-encode of the String
-      val valueU8 =
-        if (m.matched_text eq m.value)
-          ExtractIoCs.internSpan(scr, buf, m.span_start, m.span_end)
-        else ExtractIoCs.internString(scr, m.value)
-      row.update(2, valueU8)
-      row.update(3,
-        if (m.matched_text eq m.value) valueU8
-        else ExtractIoCs.internString(scr, m.matched_text))
+      ExtractIoCs.internCandidate(scr, buf, m)
+      row.update(2, scr.valueU8)
+      row.update(3, scr.matchedU8)
       row.update(4, m.span_start)
       row.update(5, m.span_end)
-      if (nHits == 0) row.update(6, EMPTY_HITS)
-      else {
-        anyHit = true
-        val exact = new Array[Any](nHits)
-        System.arraycopy(hits, 0, exact, 0, nHits)
-        row.update(6, new GenericArrayData(exact))
-      }
+      row.update(6, IntelLookupMulti.hitArray(scr, end))
+      if (end > 0) anyHit = true
       rows(i) = row
       i += 1
     }

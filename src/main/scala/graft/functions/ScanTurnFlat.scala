@@ -2,7 +2,6 @@ package graft.functions
 
 import graft.extract.{IocScanner, ScanConfig}
 import graft.intel.{BcHandle, CleanPreScreen, IntelDb}
-import graft.model.{IndicatorType => T}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, ImplicitCastInputTypes, UnaryExpression}
@@ -72,14 +71,11 @@ object ScanTurnFlat {
   ))
   val schema: DataType = ArrayType(elementSchema, containsNull = false)
 
-  private val IP = ExtractIoCs.IP
-  private val PATTERN = ExtractIoCs.PATTERN
-  private val EMPTY: ArrayData = new GenericArrayData(Array.empty[Any])
   private def typeInterned = ExtractIoCs.typeInterned
 
   private def matchRow(tpe: UTF8String, value: UTF8String,
       matchedText: UTF8String, spanStart: Int, spanEnd: Int, d: Int,
-      entryIdx: Int, prefixLen: Int, matchType: UTF8String)
+      entryIdx: Int, prefixLen: Int)
       : org.apache.spark.sql.catalyst.InternalRow = {
     val r = new GenericInternalRow(9)
     r.update(0, tpe)
@@ -90,7 +86,7 @@ object ScanTurnFlat {
     r.update(5, d)
     r.update(6, entryIdx)
     r.update(7, prefixLen)
-    r.update(8, matchType)
+    r.update(8, IntelLookupMulti.matchType(prefixLen))
     r
   }
 
@@ -102,82 +98,46 @@ object ScanTurnFlat {
     val len = text.numBytes()
     val scr = ExtractIoCs.tlScratch.get()
     val buf = ExtractIoCs.copyToScratch(scr, text)
-    if (screen != null && !screen.mightMatch(buf, len)) return EMPTY
+    if (screen != null && !screen.mightMatch(buf, len)) return ExtractIoCs.EMPTY
     val iocs = scanner.scanInto(buf, len, scr.iocs, scr.scan)
     val n = iocs.length
-    if (n == 0) return EMPTY
-    // reuse the RowScratch hit buffer to accumulate the flat rows of the
-    // whole turn (grow-only, copied to exact size at the end)
-    var rows = scr.hits
+    if (n == 0) return ExtractIoCs.EMPTY
+    // the turn's flat rows accumulate in the grow-only RowScratch row
+    // buffer and are copied to exact size at the end
+    var rows = scr.rows
     var nRows = 0
     var i = 0
     while (i < n) {
       val m = iocs(i)
-      val isV6 = m.indicator_type == T.Ipv6
-      val isIp = isV6 || (m.indicator_type == T.Ipv4)
-      var tpe: UTF8String = null
-      var valueU8: UTF8String = null
-      var matchedU8: UTF8String = null
-      // NOTE the first-hit init block below appears TWICE (ip branch and
-      // string branch) and must stay byte-identical: a nested def would
-      // box the captured vars (ObjectRef allocation per candidate — this
-      // is the hot path), so the duplication is deliberate. Edit BOTH.
-      var d = 0
-      while (d < dbs.length) {
-        val db = dbs(d)
-        if (isIp) {
-          val hit = db.lookupIp(m.value, isV6)
-          if (hit != null) {
-            if (tpe == null) {
-              tpe = typeInterned.get(m.indicator_type)
-              valueU8 = valueBytes(m, buf, scr)
-              matchedU8 =
-                if (m.matched_text eq m.value) valueU8
-                else ExtractIoCs.internString(scr, m.matched_text)
-            }
-            if (nRows == rows.length) rows = grow(scr)
-            rows(nRows) = matchRow(tpe, valueU8, matchedU8, m.span_start,
-              m.span_end, d, hit._1, hit._2, IP)
-            nRows += 1
+      val end = IntelLookupMulti.probe(dbs, m, scr)
+      // the candidate's strings are interned only once it has a hit
+      if (end > 0) {
+        val tpe = typeInterned.get(m.indicator_type)
+        ExtractIoCs.internCandidate(scr, buf, m)
+        val hits = scr.hits
+        var h = 0
+        while (h < end) {
+          if (nRows == rows.length) {
+            val bigger = new Array[Any](nRows * 2)
+            System.arraycopy(rows, 0, bigger, 0, nRows)
+            rows = bigger
+            scr.rows = rows
           }
-        } else {
-          val ids = db.lookupString(m.value)
-          var k = 0
-          while (k < ids.length) {
-            if (tpe == null) {
-              tpe = typeInterned.get(m.indicator_type)
-              valueU8 = valueBytes(m, buf, scr)
-              matchedU8 =
-                if (m.matched_text eq m.value) valueU8
-                else ExtractIoCs.internString(scr, m.matched_text)
-            }
-            if (nRows == rows.length) rows = grow(scr)
-            rows(nRows) = matchRow(tpe, valueU8, matchedU8, m.span_start,
-              m.span_end, d, ids(k), -1, PATTERN)
-            nRows += 1
-            k += 1
-          }
+          rows(nRows) = matchRow(tpe, scr.valueU8, scr.matchedU8,
+            m.span_start, m.span_end, hits(h), hits(h + 1), hits(h + 2))
+          nRows += 1
+          h += 3
         }
-        d += 1
       }
       i += 1
     }
-    if (nRows == 0) EMPTY
+    if (nRows == 0) ExtractIoCs.EMPTY
     else {
       val exact = new Array[Any](nRows)
       System.arraycopy(rows, 0, exact, 0, nRows)
       new GenericArrayData(exact)
     }
   }
-
-  @inline private def valueBytes(m: graft.model.Ioc, buf: Array[Byte],
-      scr: ExtractIoCs.RowScratch): UTF8String =
-    if (m.matched_text eq m.value)
-      ExtractIoCs.internSpan(scr, buf, m.span_start, m.span_end)
-    else ExtractIoCs.internString(scr, m.value)
-
-  private def grow(scr: ExtractIoCs.RowScratch): Array[Any] =
-    ExtractIoCs.growHits(scr)
 
   def column(text: Column, dbs: Seq[IntelDb],
       config: ScanConfig = ScanConfig()): Column =

@@ -1,6 +1,5 @@
 package graft.ops
 
-import graft.io.ParquetTableIO
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.LogicalRDD
@@ -25,7 +24,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode}
   *    blocks (`Dataset.unpersist` cannot: the LogicalRDD pins them). Not
   *    fault-tolerant: a lost executor loses the blocks, and the job.
   *  - set: a parquet table `<dir>/<pid>-<seq>-<name>` written and read
-  *    back through [[graft.io.ParquetTableIO]], durable across executor
+  *    back at that path, durable across executor
   *    loss at the cost of one table write per stage. Release deletes the
   *    table; Staging deletes only tables it wrote itself.
   *
@@ -47,11 +46,10 @@ private[graft] object Staging {
       .filter(_.nonEmpty) match {
       case None => df.localCheckpoint()
       case Some(dir) =>
-        val io = new ParquetTableIO(dir)
         val table =
-          s"${ProcessHandle.current().pid()}-${seq.incrementAndGet()}-$name"
-        io.write(df, table, SaveMode.ErrorIfExists)
-        val staged = io.read(df.sparkSession, table)
+          s"$dir/${ProcessHandle.current().pid()}-${seq.incrementAndGet()}-$name"
+        df.write.mode(SaveMode.ErrorIfExists).parquet(table)
+        val staged = df.sparkSession.read.parquet(table)
         tableRoots(staged.queryExecution.analyzed).foreach(tables.add)
         staged
     }

@@ -9,24 +9,29 @@ import org.apache.spark.sql.functions._
   * Spark plan:
   *
   * {{{
-  * turns                                         // table scan (S1)
-  *   .withColumn(ioc, explode(extract_iocs(text)))  // E1-E8, one pass
-  *   .withColumn(hit, explode(intel_lookup_multi(...)))  // L2/L3/L4 (L8)
-  *   .join(broadcast(intelMeta), ...)               // metadata BHJ
+  * turns                                            // table scan (S1)
+  *   .select(explode(scan_turn(text)))              // E1-E8 + L2/L3/L4 x L8
+  *                                                  // + clean verdict, one pass
+  *   .join(broadcast(intelMeta), ..., "left")       // metadata BHJ
   *   -> fan-out writes per indicator_type + clean sink (R4)
   *   -> gold counts + stats (A1-A6, A10) + per-partition lineage metrics
   * }}}
+  *
+  * (`run`; `matched` is the same pass through `scan_turn_flat` without the
+  * clean rows, and `enriched` the two-expression form over
+  * `extract_iocs` + `intel_lookup_multi`.)
   *
   * Scale notes (the 100 TB story):
   *  - extraction + both lookups are map-side (broadcast structures inside
   *    codegen'd expressions) — ZERO shuffles until the final aggregate,
   *    mirroring the reference's embarrassingly-parallel workers
   *    (processing/parallel.rs:494-700);
-  *  - explode() drops empty arrays, so clean turns never produce candidate
-  *    rows (the "AC finds nothing => line is clean fast" behavior);
-  *  - fan-out writes repartition by a conv_id bucket (checkpoint/resume
-  *    unit) — skewed conversations are spread because the bucket key is
-  *    hash(conv_id), and AQE skew handling stays on for the aggregates.
+  *  - a turn with no candidates costs one scan and yields one clean-marker
+  *    row in `run` and no row in `matched` (the "AC finds nothing => line
+  *    is clean fast" behavior);
+  *  - fan-out writes are partitioned by a hash(conv_id) bucket (the
+  *    checkpoint/resume unit) with no shuffle; AQE skew handling stays on
+  *    for the aggregates.
   */
 object ScanJob {
 
@@ -76,14 +81,16 @@ object ScanJob {
       "extra_json", "data_json")
   }
 
-  /** Broadcast-metadata tail shared by `enriched` and `matched`: join the
-    * (db_idx, entry_idx) hit keys to the intel metadata and derive `cidr`.
+  /** Broadcast-metadata tail shared by `enriched`, `matched` and
+    * `routedFrame`: join the (db_idx, entry_idx) hit keys to the intel
+    * metadata and derive `cidr`. `routedFrame` joins "left" so its clean
+    * rows (null keys) survive.
     */
   private def attachMeta(hits: DataFrame, dbs: Seq[IntelDb],
-      spark: SparkSession): DataFrame =
+      spark: SparkSession, joinType: String = "inner"): DataFrame =
     hits
       .join(broadcast(intelMetaDf(spark, dbs)), Seq("db_idx", "entry_idx"),
-        "inner")
+        joinType)
       .drop("db_idx")
       .withColumn("cidr",
         when(col("match_type") === "ip",
@@ -167,13 +174,14 @@ object ScanJob {
     matchedDf.groupBy("database_id", "indicator_type", "role")
       .agg(count(lit(1)).as("match_count"))
 
-  /** @param onlyBuckets restrict THIS run to a bucket subset — the sharding
+  /** Options of [[run]].
+    *
+    * @param onlyBuckets restrict THIS run to a bucket subset — the sharding
     *   knob that makes bucket-granular resume real at 10^12 turns: a huge
     *   backfill runs as K bucket-range jobs, each marking only its buckets
     *   done; a crashed job reruns only its own range (`resume = true` skips
     *   buckets already marked by earlier jobs either way).
-    */
-  /** @param ndjson when true, `run` also emits the reference-format NDJSON
+    * @param ndjson when true, `run` also emits the reference-format NDJSON
     *   match stream (S10 field shape, Sinks.ndjsonMatched) under
     *   `outDir/ndjson` — the flagship-job analog of the reference's stdout
     *   match lines (bin/match_processor/sequential.rs:154-187).
@@ -260,13 +268,7 @@ object ScanJob {
         col("hit.prefix_len").as("prefix_len"),
         col("hit.match_type").as("match_type"))
       .drop("hit")
-    rows
-      .join(broadcast(intelMetaDf(spark, dbs)), Seq("db_idx", "entry_idx"),
-        "left")
-      .drop("db_idx")
-      .withColumn("cidr",
-        when(col("match_type") === "ip",
-          concat(col("value"), lit("/"), col("prefix_len"))))
+    attachMeta(rows, dbs, spark, "left")
       // clean rows have no indicator type; 'none' keeps the partition path tidy
       .withColumn("indicator_type",
         coalesce(col("indicator_type"), lit("none")))
